@@ -75,3 +75,26 @@ def test_shingle_table_unchanged_by_spread(spark, small_df):
     }
     assert rows[0] == ["word a b", "a b c", "b c d", "c d 0"]
     assert len(rows) == 100
+
+
+@pytest.mark.parametrize(
+    "name", ["SPARK_GRAFT_SPREAD_MAX_PARTS", "SPARK_GRAFT_SPREAD_TASK_BYTES"]
+)
+@pytest.mark.parametrize("raw", ["0", "-4", "lots", ""])
+def test_spread_bad_knob_falls_back_to_default(monkeypatch, spark, small_df, name, raw):
+    from xcube_geodb_spark.functions.spread import spread_small
+
+    default = spread_small(small_df).rdd.getNumPartitions()
+    monkeypatch.setenv(name, raw)
+    with pytest.warns(RuntimeWarning, match=name):
+        out = spread_small(small_df)
+    assert out.rdd.getNumPartitions() == default
+
+
+def test_spread_bad_threshold_falls_back_to_default(monkeypatch, small_df):
+    from xcube_geodb_spark.functions.spread import spread_small
+
+    monkeypatch.setenv("SPARK_GRAFT_SPREAD_SMALL_BYTES", "1e9")
+    with pytest.warns(RuntimeWarning, match="SPARK_GRAFT_SPREAD_SMALL_BYTES"):
+        out = spread_small(small_df)
+    assert out is not small_df  # the default threshold admits the input

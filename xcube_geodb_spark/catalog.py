@@ -34,7 +34,9 @@ Mandatory columns (parity with ``geodb.sql:309-314``):
 ``geometry`` binary WKB — plus engine envelope columns
 ``__xmin/__ymin/__xmax/__ymax`` persisted at ingest so spatial scans prune
 parquet files/row-groups via min/max statistics (the Spark replacement for
-the reference's GIST index, SURVEY.md §4).
+the reference's GIST index, SURVEY.md §4), and the ``__shape`` code whose
+per-file max tells bbox scans when the envelope alone answers the exact
+predicate.
 """
 
 from __future__ import annotations
@@ -53,7 +55,11 @@ from pyspark.sql import types as T
 from xcube_geodb_spark.errors import GeoDBError
 
 MANDATORY_PROPERTIES = ["geometry", "id", "created_at", "modified_at"]
-SYSTEM_COLUMNS = ["__xmin", "__ymin", "__xmax", "__ymax"]
+ENVELOPE_COLUMNS = ["__xmin", "__ymin", "__xmax", "__ymax"]
+# __shape: per-row tinyint code from geometry.udfs.envelope_kernel (0 when
+# the geometry is its own envelope); a tinyint, not a boolean, because
+# commit-time file stats record int min/max but skip booleans
+SYSTEM_COLUMNS = [*ENVELOPE_COLUMNS, "__shape"]
 
 # Postgres type-name -> Spark type (reference properties are raw PG type
 # strings, ``geodb.py:657-658``; tests use float/date/integer/int/text)
@@ -286,8 +292,9 @@ class CollectionMeta:
         for name, pg_type in self._d["properties"].items():
             fields.append(T.StructField(name, pg_type_to_spark(pg_type), True))
         if include_system:
-            for c in SYSTEM_COLUMNS:
+            for c in ENVELOPE_COLUMNS:
                 fields.append(T.StructField(c, T.DoubleType(), True))
+            fields.append(T.StructField("__shape", T.ByteType(), True))
         return T.StructType(fields)
 
 

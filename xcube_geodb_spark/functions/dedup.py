@@ -256,30 +256,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def simhash_fingerprint(
-    text: Column, bits: int = 16
-) -> Column:
-    """SimHash over distinct tokens: bit b of a token's hash is the high bit
-    of hex digit b of its md5; the fingerprint bit is the sign of the vote
-    sum. Returned as a '0'/'1' string of length ``bits`` (cross-engine
-    portable — no 64-bit int wrangling)."""
-    toks = F.array_distinct(F.split(normalized(text), " "))
-    hashes = F.transform(toks, lambda t: F.md5(t))
-
-    def _vote(b: int):
-        # exactly two parameters: (acc, element) — a third would make Spark
-        # interpret it as the aggregate finish-function form
-        return lambda acc, h: acc + F.when(
-            F.substring(h, b + 1, 1) >= "8", 1
-        ).otherwise(-1)
-
-    bit_chars = []
-    for b in range(bits):
-        vote = F.aggregate(hashes, F.lit(0), _vote(b))
-        bit_chars.append(F.when(vote >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bit_chars)
-
-
 def simhash_fingerprints(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id", bits: int = 16
 ) -> DataFrame:

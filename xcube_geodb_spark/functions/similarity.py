@@ -53,12 +53,6 @@ def l2_normalize(a: Column, eps: float = 1e-12) -> Column:
     return F.transform(_to_double(a), lambda x: x / n)
 
 
-def with_normalized_embedding(
-    df, vec_col: str = "embedding", out_col: str = "embedding_unit"
-):
-    return df.withColumn(out_col, l2_normalize(F.col(vec_col)))
-
-
 def with_quantized_embedding(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -1004,20 +998,6 @@ def assigned_centroid_arr(
         *[F.array(*[F.lit(float(x)) for x in c]) for c in centroids]
     )
     return F.element_at(cents, F.col(bucket_col) + 1)
-
-
-def residual_of(
-    vec_col: str, centroids: list[list[float]], bucket_col: str
-) -> Column:
-    """``v - centroids[bucket]`` as pure Column algebra (the IVFADC
-    residual, Jegou et al. 2011: quantizing the residual instead of the
-    raw vector concentrates the PQ codebook's dynamic range on the
-    within-list displacement, which is what ADC actually ranks)."""
-    return F.zip_with(
-        _to_double(F.col(vec_col)),
-        assigned_centroid_arr(centroids, bucket_col),
-        lambda a, b: a - b,
-    )
 
 
 def _py_assign(v: list[float], centroids: list[list[float]]) -> int:

@@ -52,7 +52,7 @@ _ENV = ("__xmin", "__ymin", "__xmax", "__ymax")
 def _ensure_env(df: DataFrame, geom: str) -> DataFrame:
     if all(c in df.columns for c in _ENV):
         return df
-    return with_envelope_columns(df, geom)
+    return with_envelope_columns(df, geom).drop("__shape")
 
 
 def derive_cell_size(left: DataFrame, right: DataFrame) -> float:

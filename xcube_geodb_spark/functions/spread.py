@@ -45,6 +45,7 @@ from __future__ import annotations
 
 import math
 import os
+import warnings
 
 from pyspark.sql import DataFrame
 
@@ -75,10 +76,8 @@ def spread_small(
     except Exception:
         return df
     if threshold is None:
-        threshold = int(
-            os.environ.get(
-                "SPARK_GRAFT_SPREAD_SMALL_BYTES", _DEFAULT_THRESHOLD
-            )
+        threshold = _env_int(
+            "SPARK_GRAFT_SPREAD_SMALL_BYTES", _DEFAULT_THRESHOLD, minimum=None
         )
     if size <= 0 or size > threshold:
         return df
@@ -87,19 +86,32 @@ def spread_small(
             par = df.sparkSession.sparkContext.defaultParallelism
         except Exception:
             return df
-        task_bytes = int(
-            os.environ.get(
-                "SPARK_GRAFT_SPREAD_TASK_BYTES", _DEFAULT_TASK_BYTES
-            )
-        )
-        hard_cap = int(
-            os.environ.get(
-                "SPARK_GRAFT_SPREAD_MAX_PARTS", _DEFAULT_MAX_PARTS
-            )
-        )
+        task_bytes = _env_int("SPARK_GRAFT_SPREAD_TASK_BYTES", _DEFAULT_TASK_BYTES)
+        hard_cap = _env_int("SPARK_GRAFT_SPREAD_MAX_PARTS", _DEFAULT_MAX_PARTS)
         partitions = min(
             2 * par,
-            max(par, math.ceil(size / max(task_bytes, 1))),
+            max(par, math.ceil(size / task_bytes)),
             hard_cap,
         )
     return df.repartition(int(partitions))
+
+
+def _env_int(name: str, default: int, minimum: int | None = 1) -> int:
+    """Integer knob from the environment; a malformed value, or one below
+    ``minimum``, falls back to ``default`` with a warning."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        value = int(raw)
+        if minimum is None or value >= minimum:
+            return value
+    except ValueError:
+        pass
+    bound = "" if minimum is None else f" >= {minimum}"
+    warnings.warn(
+        f"ignoring {name}={raw!r} (expected an integer{bound}); using {default}",
+        RuntimeWarning,
+        stacklevel=3,
+    )
+    return default

@@ -80,22 +80,6 @@ def _quality_exprs(
     }
 
 
-def quality_score_columns(text_col: str = "text") -> dict[str, Column]:
-    """Deterministic quality heuristics: length, punctuation density,
-    stopword ratio, alphabetic ratio, and a blended [0,1] score —
-    :func:`_quality_exprs` with the staging expressions inlined (each
-    returned Column is self-contained; callers that score whole tables
-    should prefer :func:`with_quality_score`, which materializes the
-    normalized string once instead of once per reference)."""
-    text = F.col(text_col)
-    return _quality_exprs(
-        text,
-        normalized(text),
-        F.length(text) - F.length(F.translate(text, _ALPHABET, "")),
-        F.length(text) - F.length(F.translate(text, _PUNCT, "")),
-    )
-
-
 def with_quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Table-level quality scoring with the normalized string materialized
     once — the single-expression columns re-run normalization per
@@ -165,23 +149,6 @@ def lang_id_from_norm(norm: Column) -> Column:
             lang: word_count_in(norm, sw)
             for lang, sw in LANG_STOPWORDS.items()
         }
-    )
-
-
-def lang_id_from_tokens(toks: Column) -> Column:
-    """Stopword-vote language id over an already-materialized token array;
-    first-match CASE gives earlier languages the tie-break (a classic
-    n-gram-free heuristic, SQL-replicable). Prefer
-    :func:`lang_id_from_norm` when the normalized STRING is at hand —
-    higher-order filters evaluate interpreted per element."""
-
-    def _hits(words: tuple[str, ...]) -> Column:
-        # single-parameter lambda: two-parameter lambdas become
-        # (element, index) functions in Spark's filter()
-        return F.size(F.filter(toks, lambda t: t.isin(*words)))
-
-    return _lang_case(
-        {lang: _hits(sw) for lang, sw in LANG_STOPWORDS.items()}
     )
 
 

@@ -1,12 +1,18 @@
-"""Arrow-vectorized pandas UDFs wrapping the geometry kernel.
+"""Arrow-vectorized pandas UDFs wrapping the geometry kernel, and the
+JVM-side envelope predicates that let scans avoid them.
 
-These are the only places the engine leaves the JVM on the data path, and
-each is batch-vectorized (Arrow transfer, numpy inner loops). Scans avoid
-calling them entirely when the envelope pre-filter is decisive
-(operators/spatial.py).
+The UDFs are batch-vectorized (Arrow transfer, numpy inner loops). Ingest
+runs :func:`envelope_kernel` once per row to persist the envelope columns
+and the ``__shape`` code. A bbox scan always pushes
+:func:`envelope_prefilter` into the parquet scan; its exact predicate is
+:func:`envelope_predicate_sql` (pure Catalyst, no Python worker) when the
+manifest stats prove every row ``SHAPE_SIMPLE``, and
+:func:`bbox_predicate_column` otherwise (operators/spatial.py).
 """
 
 from __future__ import annotations
+
+import math
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -19,6 +25,10 @@ from xcube_geodb_spark.geometry.geom import (
     parse_wkb,
 )
 from xcube_geodb_spark.geometry.predicates import Box, bbox_predicate
+
+_POINT_WKB_LE = b"\x01\x01\x00\x00\x00"  # little-endian 2D point header
+# little-endian polygon, 1 ring, 5 points: the fixed 93-byte rectangle form
+_RECT_WKB_LE = b"\x01\x03\x00\x00\x00\x01\x00\x00\x00\x05\x00\x00\x00"
 
 _ENVELOPE_TYPE = T.StructType(
     [
@@ -36,26 +46,64 @@ def geom_type_udf(wkb: pd.Series) -> pd.Series:
     return wkb.map(lambda b: geometry_type_wkb(b) if b is not None else None)
 
 
-@F.pandas_udf(_ENVELOPE_TYPE)
-def envelope_udf(wkb: pd.Series) -> pd.DataFrame:
+SHAPE_SIMPLE = 0  # the geometry is its own envelope (or NULL)
+SHAPE_OTHER = 1  # anything the exact kernel must evaluate
+
+_ENVELOPE_SHAPE_TYPE = T.StructType(
+    [*_ENVELOPE_TYPE.fields, T.StructField("shape", T.ByteType())]
+)
+
+
+def _rect_ring_ok(xs, ys):
+    """Mask of 5-point rings (``xs``/``ys`` of shape (n, 5)) that are true
+    axis-aligned rectangles: closed, consecutive edges alternate
+    horizontal/vertical, and each diagonal pair differs in BOTH
+    coordinates. The diagonal test rejects degenerate out-and-back rings
+    whose phantom envelope would disagree with the exact kernel."""
     import numpy as np
 
-    vals = wkb.to_numpy(dtype=object)
+    ok = (xs[:, 0] == xs[:, 4]) & (ys[:, 0] == ys[:, 4])
+    for k in range(4):
+        ok &= (xs[:, k] == xs[:, k + 1]) | (ys[:, k] == ys[:, k + 1])
+    return ok & (
+        (xs[:, 0] != xs[:, 2])
+        & (ys[:, 0] != ys[:, 2])
+        & (xs[:, 1] != xs[:, 3])
+        & (ys[:, 1] != ys[:, 3])
+    )
+
+
+def envelope_kernel(vals):
+    """Envelopes and shape codes of a batch of WKB values (object array).
+
+    Returns an (n, 4) float array of (xmin, ymin, xmax, ymax), NaN for
+    NULL geometry, and an (n,) int8 array of shape codes:
+    ``SHAPE_SIMPLE`` for NULL, a finite little-endian 2D point, or a
+    finite axis-aligned rectangle (the exact layouts
+    :func:`bbox_predicate_column` decodes on its numpy fast path), else
+    ``SHAPE_OTHER``. Envelopes are bit-identical to
+    ``envelope(parse_wkb(...))``."""
+    import numpy as np
+
     n = len(vals)
     cols = np.full((n, 4), np.nan)
+    shape = np.full(n, SHAPE_OTHER, dtype=np.int8)
+    is_null = np.fromiter((b is None for b in vals), dtype=bool, count=n)
+    shape[is_null] = SHAPE_SIMPLE
     is_point = np.fromiter(
         (
-            b is not None and len(b) == 21 and bytes(b[:5]) == b"\x01\x01\x00\x00\x00"
+            b is not None and len(b) == 21 and bytes(b[:5]) == _POINT_WKB_LE
             for b in vals
         ),
         dtype=bool,
         count=n,
     )
-    handled = is_point.copy()
+    handled = is_point | is_null
     idx = np.nonzero(is_point)[0]
     if len(idx):  # vectorized 2D-point fast path
         buf = b"".join(bytes(vals[i][5:21]) for i in idx)
         coords = np.frombuffer(buf, dtype="<f8").reshape(-1, 2)
+        shape[idx[np.isfinite(coords).all(axis=1)]] = SHAPE_SIMPLE
         # NaN coordinates: the scalar kernel folds them against +/-inf
         # (Python min/max keep the first arg on a NaN comparison) while
         # the batch path would surface NaN -> NULL. Route those rows to
@@ -70,17 +118,16 @@ def envelope_udf(wkb: pd.Series) -> pd.DataFrame:
     # parcels — the dominant non-point ingest shape): one frombuffer +
     # axis-min/max per distinct byte length instead of a per-row
     # parse_wkb. Bit-identical to envelope(parse_wkb(...)) — rings with
-    # any NaN coordinate are routed to the fallback above, since numpy
+    # any NaN coordinate are routed to the fallback below, since numpy
     # min/max propagate NaN where the scalar path's Python min/max
     # against +/-inf yield inf/-inf; a polygon's envelope is the min/max
     # of its outer ring's points.
-    poly1_hdr = b"\x01\x03\x00\x00\x00\x01\x00\x00\x00"
+    poly1_hdr = _RECT_WKB_LE[:9]
     by_len: dict[int, list[int]] = {}
     for i in np.nonzero(~handled)[0]:
         b = vals[i]
         if (
-            b is not None
-            and len(b) >= 29
+            len(b) >= 29
             and bytes(b[:9]) == poly1_hdr
             and len(b)
             == 13 + 16 * int.from_bytes(bytes(b[9:13]), "little")
@@ -92,6 +139,9 @@ def envelope_udf(wkb: pd.Series) -> pd.DataFrame:
         buf = b"".join(bytes(vals[i][13:]) for i in idxs)
         coords = np.frombuffer(buf, dtype="<f8").reshape(len(idxs), npts, 2)
         a = np.asarray(idxs)
+        if npts == 5:
+            rect = _rect_ring_ok(coords[:, :, 0], coords[:, :, 1])
+            shape[a[rect & np.isfinite(coords).all(axis=(1, 2))]] = SHAPE_SIMPLE
         nan_rows = np.isnan(coords).any(axis=(1, 2))
         if nan_rows.any():
             handled[a[nan_rows]] = False
@@ -103,29 +153,46 @@ def envelope_udf(wkb: pd.Series) -> pd.DataFrame:
         cols[a, 2] = coords[:, :, 0].max(axis=1)
         cols[a, 3] = coords[:, :, 1].max(axis=1)
     for i in np.nonzero(~handled)[0]:
-        if vals[i] is not None:
-            cols[i] = envelope(parse_wkb(bytes(vals[i])))
-    out = pd.DataFrame(cols, columns=["xmin", "ymin", "xmax", "ymax"])
-    return out.where(pd.notna(out), None)
+        cols[i] = envelope(parse_wkb(bytes(vals[i])))
+    return cols, shape
+
+
+def envelope_frame(vals, index=None) -> pd.DataFrame:
+    """:func:`envelope_kernel` as a frame: xmin/ymin/xmax/ymax (None for
+    NULL geometry) and the int8 ``shape`` code."""
+    cols, shape = envelope_kernel(vals)
+    env = pd.DataFrame(cols, columns=["xmin", "ymin", "xmax", "ymax"], index=index)
+    out = env.astype(object).where(env.notna(), None)
+    out["shape"] = pd.Series(shape, index=out.index)
+    return out
+
+
+@F.pandas_udf(_ENVELOPE_TYPE)
+def envelope_udf(wkb: pd.Series) -> pd.DataFrame:
+    return envelope_frame(wkb.to_numpy(dtype=object)).drop(columns="shape")
+
+
+@F.pandas_udf(_ENVELOPE_SHAPE_TYPE)
+def _envelope_shape_udf(wkb: pd.Series) -> pd.DataFrame:
+    return envelope_frame(wkb.to_numpy(dtype=object))
 
 
 def with_envelope_columns(df: DataFrame, geometry_col: str = "geometry") -> DataFrame:
     """Persisted at ingest: __xmin/__ymin/__xmax/__ymax envelope columns
-    drive parquet min/max file pruning for every spatial scan."""
-    env = envelope_udf(F.col(geometry_col)).alias("__env")
+    drive parquet min/max file pruning for every spatial scan; the
+    ``__shape`` code lets bbox scans skip the exact kernel on
+    collections whose stats prove every geometry is its own envelope
+    (operators/spatial.py)."""
+    env = _envelope_shape_udf(F.col(geometry_col)).alias("__env")
     df = df.withColumn("__env", env)
     return (
         df.withColumn("__xmin", F.col("__env.xmin"))
         .withColumn("__ymin", F.col("__env.ymin"))
         .withColumn("__xmax", F.col("__env.xmax"))
         .withColumn("__ymax", F.col("__env.ymax"))
+        .withColumn("__shape", F.col("__env.shape"))
         .drop("__env")
     )
-
-
-_POINT_WKB_LE = b"\x01\x01\x00\x00\x00"  # little-endian 2D point header
-# little-endian polygon, 1 ring, 5 points: the fixed 93-byte rectangle form
-_RECT_WKB_LE = b"\x01\x03\x00\x00\x00\x01\x00\x00\x00\x05\x00\x00\x00"
 
 
 def _rect_batch_predicate(mode: str, env, box: Box):
@@ -240,23 +307,7 @@ def bbox_predicate_column(mode: str, box: Box, geometry_col: str = "geometry") -
             buf = b"".join(bytes(vals[i][13:93]) for i in ridx)
             ring = np.frombuffer(buf, dtype="<f8").reshape(-1, 5, 2)
             xs, ys = ring[..., 0], ring[..., 1]
-            closed = (xs[:, 0] == xs[:, 4]) & (ys[:, 0] == ys[:, 4])
-            # axis-aligned rectangle: consecutive edges alternate
-            # horizontal/vertical
-            axis = np.ones(len(ridx), dtype=bool)
-            for k in range(4):
-                axis &= (xs[:, k] == xs[:, k + 1]) | (ys[:, k] == ys[:, k + 1])
-            # each diagonal pair must differ in BOTH coordinates; with
-            # axis-aligned edges this forces a true 4-corner rectangle and
-            # rejects degenerate out-and-back rings whose phantom envelope
-            # would disagree with the exact kernel
-            diag = (
-                (xs[:, 0] != xs[:, 2])
-                & (ys[:, 0] != ys[:, 2])
-                & (xs[:, 1] != xs[:, 3])
-                & (ys[:, 1] != ys[:, 3])
-            )
-            rect_ok = closed & axis & diag
+            rect_ok = _rect_ring_ok(xs, ys)
             env = np.stack(
                 [
                     xs[:, :4].min(axis=1),
@@ -282,6 +333,65 @@ def bbox_predicate_column(mode: str, box: Box, geometry_col: str = "geometry") -
         return pd.Series(out)
 
     return _pred(F.col(geometry_col))
+
+
+def envelope_predicate_sql(mode: str, box: Box) -> str | None:
+    """Exact ``ST_<mode>(bbox, geom)`` over the persisted envelope columns,
+    as one Spark SQL string — valid only for rows whose ``__shape`` is
+    ``SHAPE_SIMPLE`` (NULL geometry, or a geometry equal to its finite
+    envelope).
+
+    Mirrors :func:`_point_batch_predicate` (rows with ``__xmin = __xmax``)
+    and :func:`_rect_batch_predicate` (all others) operation for
+    operation: every box-side constant is computed here in Python floats
+    exactly as the numpy path computes it, and rendered as a ``D``
+    literal (a bare ``0.1`` would parse as DECIMAL). One parsed string
+    instead of ~150 py4j Column calls. Returns None for a non-finite box,
+    where Spark's NaN ordering would diverge from numpy's."""
+    bx = tuple(float(v) for v in box)
+    if not all(math.isfinite(v) for v in bx):
+        return None
+    xmin, ymin, xmax, ymax = bx
+    eps = 1e-9 * max(abs(xmin), abs(ymin), abs(xmax), abs(ymax), 1.0)
+
+    def d(v: float) -> str:
+        return f"({v!r}D)"
+
+    closed = (
+        f"__xmin >= {d(xmin)} AND __xmin <= {d(xmax)} "
+        f"AND __ymin >= {d(ymin)} AND __ymin <= {d(ymax)}"
+    )
+    interior = (
+        f"__xmin > {d(xmin + eps)} AND __xmin < {d(xmax - eps)} "
+        f"AND __ymin > {d(ymin + eps)} AND __ymin < {d(ymax - eps)}"
+    )
+    ix = f"(least({d(xmax)}, __xmax) - greatest({d(xmin)}, __xmin))"
+    iy = f"(least({d(ymax)}, __ymax) - greatest({d(ymin)}, __ymin))"
+    intersects = f"{ix} >= {d(-eps)} AND {iy} >= {d(-eps)}"
+    ii = f"{ix} > {d(eps)} AND {iy} > {d(eps)}"
+    sq_in_box = (
+        f"__xmin >= {d(xmin - eps)} AND __xmax <= {d(xmax + eps)} "
+        f"AND __ymin >= {d(ymin - eps)} AND __ymax <= {d(ymax + eps)}"
+    )
+    box_in_sq = (
+        f"__xmin <= {d(xmin + eps)} AND __xmax >= {d(xmax - eps)} "
+        f"AND __ymin <= {d(ymin + eps)} AND __ymax >= {d(ymax - eps)}"
+    )
+    point, rect = {
+        "intersects": (closed, intersects),
+        "disjoint": (f"NOT ({closed})", f"NOT ({intersects})"),
+        "contains": (interior, f"{sq_in_box} AND {ii}"),
+        "within": ("false", box_in_sq),
+        "touches": (f"({closed}) AND NOT ({interior})", f"({intersects}) AND NOT ({ii})"),
+        "overlaps": ("false", f"{ii} AND NOT ({sq_in_box}) AND NOT ({box_in_sq})"),
+        "equals": ("false", f"{sq_in_box} AND {box_in_sq}"),
+        "crosses": ("false", "false"),
+    }[mode]
+    # least/greatest skip NULLs, so NULL geometry must be decided first
+    return (
+        f"CASE WHEN __xmin IS NULL THEN false "
+        f"WHEN __xmin = __xmax THEN {point} ELSE {rect} END"
+    )
 
 
 def envelope_prefilter(mode: str, box: Box) -> Column | None:

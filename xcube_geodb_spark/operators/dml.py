@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from xcube_geodb_spark.catalog import (
+    ENVELOPE_COLUMNS,
     SYSTEM_COLUMNS,
     CollectionMeta,
     GeoDBCatalog,
@@ -43,7 +44,11 @@ from xcube_geodb_spark.geometry.geom import (
     parse_wkt,
     to_wkb,
 )
-from xcube_geodb_spark.geometry.udfs import with_envelope_columns
+from xcube_geodb_spark.geometry.udfs import (
+    SHAPE_SIMPLE,
+    envelope_frame,
+    with_envelope_columns,
+)
 from xcube_geodb_spark.operators.ids import assign_sequential_ids_counted
 
 
@@ -177,13 +182,13 @@ def _with_envelopes(df: DataFrame, had_geom: bool) -> DataFrame:
     is NULL for every new row), the envelopes are NULL by definition —
     emit them as literals instead of round-tripping every row through the
     Arrow envelope kernel (identical output: the kernel maps NULL WKB to
-    all-NULL envelopes)."""
+    all-NULL envelopes and the simple shape code)."""
     if had_geom:
         return with_envelope_columns(df)
     out = df
-    for c in ("__xmin", "__ymin", "__xmax", "__ymax"):
+    for c in ENVELOPE_COLUMNS:
         out = out.withColumn(c, F.lit(None).cast("double"))
-    return out
+    return out.withColumn("__shape", F.lit(SHAPE_SIMPLE).cast("tinyint"))
 
 
 def insert_into_collection(
@@ -246,22 +251,22 @@ def insert_into_collection(
     m = catalog.meta_for_write(collection, database)
     base_version = m.version if expected_version is None else expected_version
     if isinstance(values, pd.DataFrame) and not upsert:
-        # fast path: the rows are already driver-side — assign ids AND
-        # envelopes in pandas, skipping every Python-worker round-trip
-        # (id-assignment jobs + the envelope UDF)
-        from xcube_geodb_spark.geometry.geom import envelope as _envelope
-
+        # fast path: the rows are already driver-side — assign ids,
+        # envelopes and shape codes in pandas (the same numpy kernel the
+        # envelope UDF runs), skipping every Python-worker round-trip
         pdf = values.copy()
         pdf.columns = [c.lower() for c in pdf.columns]
         pdf = pdf.drop(columns=["id"], errors="ignore")  # geodb.py:1499-1500
         pdf["id"] = range(m.max_id + 1, m.max_id + 1 + len(pdf))
         if "geometry" in pdf.columns:
             pdf["geometry"] = pdf["geometry"].map(_normalize_geometry_value)
-            envs = pdf["geometry"].map(
-                lambda b: _envelope(parse_wkb(b)) if b is not None else (None,) * 4
+            env = envelope_frame(
+                pdf["geometry"].to_numpy(dtype=object), index=pdf.index
             )
-            for i, c in enumerate(("__xmin", "__ymin", "__xmax", "__ymax")):
-                pdf[c] = envs.map(lambda e, i=i: e[i])
+            for c, e in zip(SYSTEM_COLUMNS, env.columns):
+                pdf[c] = env[e]
+        else:
+            pdf["__shape"] = pd.Series(SHAPE_SIMPLE, index=pdf.index, dtype="int8")
         df = prepare_values_df(catalog, m, pdf, crs, include_system=True)
         schema = m.spark_schema(include_system=True)
         for f in schema.fields:

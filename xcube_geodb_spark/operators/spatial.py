@@ -8,8 +8,16 @@ strategy (SURVEY.md §4):
 1. cheap envelope pre-filter on the persisted ``__xmin..__ymax`` columns —
    a plain range predicate Catalyst pushes into the parquet scan, so files
    and row groups outside the query box are never read;
-2. exact predicate via the vectorized geometry-kernel UDF on survivors;
-3. ``ORDER BY id`` + limit/offset, parity with ``geodb.sql:1240-1241``.
+2. exact predicate on survivors, chosen once per query from the manifest:
+   when every live file's commit-time stats prove each row's ``__shape``
+   simple (NULL, a finite point, or a finite axis-aligned rectangle — the
+   geometry IS its envelope), a pure-Catalyst predicate over the envelope
+   columns (``envelope_predicate_sql``, no Python worker); otherwise the
+   vectorized geometry-kernel UDF (legacy files without ``__shape`` and
+   collections holding any other shape);
+3. ``ORDER BY id`` + limit/offset, parity with ``geodb.sql:1240-1241`` —
+   one sorted partition (the client collects the result anyway), so no
+   range-sampling job re-runs step 2.
 
 The pre-filter is applied only when it is a *necessary* condition of the
 final predicate (AND-composition with ``where``; never for ``disjoint``).
@@ -23,12 +31,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from xcube_geodb_spark.catalog import SYSTEM_COLUMNS, GeoDBCatalog
+from xcube_geodb_spark.catalog import SYSTEM_COLUMNS, CollectionMeta, GeoDBCatalog
 from xcube_geodb_spark.errors import GeoDBError
 from xcube_geodb_spark.geometry.crs import check_crs, transform_bbox_crs
 from xcube_geodb_spark.geometry.predicates import COMPARISON_MODES
 from xcube_geodb_spark.geometry.udfs import (
+    SHAPE_SIMPLE,
     bbox_predicate_column,
+    envelope_predicate_sql,
     envelope_prefilter,
     geom_type_udf,
 )
@@ -55,6 +65,27 @@ def _aligned_bbox(
     return bbox
 
 
+def _all_rows_simple(m: CollectionMeta) -> bool:
+    """True when the manifest's commit-time stats prove every live row's
+    ``__shape`` is ``SHAPE_SIMPLE``: each file records a ``__shape`` max
+    of 0 and no NULL codes (a legacy file lacks the column, so its rows
+    read back NULL). Files with no rows carry no column stats. Memoized
+    per manifest snapshot."""
+    if "all_simple" not in m._derived:
+        fstats = m.file_stats()
+
+        def simple(st) -> bool:
+            if (st.get("::rows") or [1])[0] == 0:
+                return True
+            shape, nulls = st.get("__shape"), st.get("::nulls:__shape")
+            return shape is not None and shape[1] == SHAPE_SIMPLE and nulls == [0, 0]
+
+        m._derived["all_simple"] = all(
+            f in fstats and simple(fstats[f]) for f in m.files
+        )
+    return m._derived["all_simple"]
+
+
 def _bbox_filtered(
     catalog: GeoDBCatalog,
     collection: str,
@@ -73,8 +104,14 @@ def _bbox_filtered(
     op = (op or "AND").upper()
     if op not in ("AND", "OR"):
         raise GeoDBError(f"op must be AND or OR, got {op!r}")
+    m = catalog.meta(collection, database)
     df = catalog.load_df(collection, database, include_system=True)
-    exact = bbox_predicate_column(comparison_mode, bbox)
+    sql = None
+    # the two manifest reads bracket load_df: equal versions prove the
+    # frame reads exactly the snapshot whose stats were checked
+    if _all_rows_simple(m) and catalog.meta(collection, database).version == m.version:
+        sql = envelope_predicate_sql(comparison_mode, bbox)
+    exact = F.expr(sql) if sql else bbox_predicate_column(comparison_mode, bbox)
     pre = envelope_prefilter(comparison_mode, bbox)
     if where:
         wcol = F.expr(where)
@@ -107,10 +144,14 @@ def get_collection_by_bbox(
     database: str = "public",
     wsg84_order: str = "lon_lat",
 ) -> DataFrame:
-    """Spatial scan (``geodb.py:1577-1669`` / ``geodb.sql:1179-1257``)."""
+    """Spatial scan (``geodb.py:1577-1669`` / ``geodb.sql:1179-1257``).
+
+    The result is one partition sorted by id: the client collects it
+    anyway, and a global ``orderBy`` would add a range-sampling job that
+    evaluates the exact predicate a second time."""
     bbox = _aligned_bbox(catalog, collection, database, bbox, bbox_crs, wsg84_order)
     df = _bbox_filtered(catalog, collection, database, bbox, comparison_mode, where, op)
-    df = df.drop(*SYSTEM_COLUMNS).orderBy("id")
+    df = df.drop(*SYSTEM_COLUMNS).repartition(1).sortWithinPartitions("id")
     if offset:
         df = df.offset(int(offset))
     if limit:
