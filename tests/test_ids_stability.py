@@ -60,6 +60,19 @@ class TestSequentialIds:
         ids = sorted(r["id"] for r in out.select("id").collect())
         assert ids == list(range(3, 103))
 
+    def test_many_partitions_take_broadcast_offsets(self, spark):
+        # one row in each of 4,100 input partitions: more per-partition
+        # offsets than the literal map holds, so the assigner joins them
+        # in as a broadcast (no forced threshold)
+        import xcube_geodb_spark.operators.ids as ids_mod
+
+        n = ids_mod._OFFSET_MAP_MAX_ENTRIES + 4
+        df = spark.range(0, n, 1, n).select(F.col("id").alias("v"))
+        out = _checked(df, start=7, expect_n=n)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" in plan
+        assert "element_at" not in plan
+
     def test_insert_of_aggregated_batch_keeps_every_row(self, spark):
         # end-to-end pin of the bug the smoke caught: inserting an
         # aggregated (shuffle-bearing) Spark batch into a collection must

@@ -137,12 +137,33 @@ class TestRound2PlanShape:
 
 
 class TestRound4PlanShape:
-    def test_knn_candidate_filter_pushes_envelope_bounds(self, client):
+    def test_knn_candidate_filter_pushes_envelope_bounds(
+        self, client, monkeypatch
+    ):
         # the exact-distance pass must carry a pushable range predicate on
-        # the envelope columns (same pruning surface as a bbox scan)
+        # the envelope columns (same pruning surface as a bbox scan). The
+        # driver-refine branch collects the candidate frame and returns a
+        # local frame, so pin the frame it collected; the UDF branch scores
+        # the candidates inside the returned plan
+        built = []
+
+        def spy(*args):
+            built.append(knn_candidates(*args))
+            return built[-1]
+
+        knn_candidates = spatial._knn_candidates
+        monkeypatch.setattr(spatial, "_knn_candidates", spy)
         df = spatial.get_knn(
             client.catalog, "pts", (10.0, 10.0), k=5, database="planner"
         )
+        assert "LocalTableScan" in executed_plan(df)
+        assert has_pushed_filter(built[-1], "__xmin")
+
+        monkeypatch.setattr(spatial, "_KNN_DRIVER_ROWS", 0)
+        df = spatial.get_knn(
+            client.catalog, "pts", (10.0, 10.0), k=5, database="planner"
+        )
+        assert "ArrowEvalPython" in executed_plan(df)
         assert has_pushed_filter(df, "__xmin")
 
     def test_point_lookup_plans_single_file_scan(self, client):

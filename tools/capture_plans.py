@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Capture .explain('formatted') for bench/headline queries into
 plans/<round>/<query>_<tag>.txt (optimization-round evidence artifacts;
-round dir from $SPARK_GRAFT_PLANS_ROUND, default r13).
+round dir from $SPARK_GRAFT_PLANS_ROUND, default the newest plans/r<N>).
 
 Usage: python tools/capture_plans.py <tag> [query ...]
        (default queries: the bench HEADLINE list)
@@ -23,6 +23,17 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
+def default_round(plans_dir: str) -> str:
+    """Name of the newest ``r<N>`` directory under ``plans_dir`` (largest
+    N), or ``r1`` when there is none."""
+    rounds = [
+        d for d in (os.listdir(plans_dir) if os.path.isdir(plans_dir) else [])
+        if d[:1] == "r" and d[1:].isdigit()
+        and os.path.isdir(os.path.join(plans_dir, d))
+    ]
+    return max(rounds, key=lambda d: int(d[1:]), default="r1")
+
+
 def main() -> int:
     tag = sys.argv[1] if len(sys.argv) > 1 else "before"
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -34,8 +45,10 @@ def main() -> int:
         import bench
 
         names = list(bench.HEADLINE)
+    plans_dir = os.path.join(REPO, "plans")
     out_dir = os.path.join(
-        REPO, "plans", os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r13")
+        plans_dir,
+        os.environ.get("SPARK_GRAFT_PLANS_ROUND") or default_round(plans_dir),
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="capture_plans")

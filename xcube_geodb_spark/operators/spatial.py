@@ -25,6 +25,7 @@ final predicate (AND-composition with ``where``; never for ``disjoint``).
 
 from __future__ import annotations
 
+import math
 import os
 
 import pandas as pd
@@ -225,6 +226,52 @@ def get_collection_bbox(
     return (mm["__xmin"][0], mm["__ymin"][0], mm["__xmax"][1], mm["__ymax"][1])
 
 
+# candidate rows the kNN refine scores on the driver (the grain of
+# ``ids._OFFSET_MAP_MAX_ENTRIES``); above it the distance UDF scores them
+_KNN_DRIVER_ROWS = 4096
+
+
+def _knn_bounds(qx: float, qy: float):
+    """Per-row (lower, upper) bounds on the distance to ``(qx, qy)``, plain
+    Column arithmetic on the persisted envelope columns. Lower: point to
+    envelope box, 0 inside. Upper: distance to the envelope center plus
+    half its diagonal (the geometry is non-empty inside its tight
+    envelope, so some geometry point is within half a diagonal of the
+    center)."""
+    zero = F.lit(0.0)
+    dx = F.greatest(F.col("__xmin") - qx, F.lit(qx) - F.col("__xmax"), zero)
+    dy = F.greatest(F.col("__ymin") - qy, F.lit(qy) - F.col("__ymax"), zero)
+    lb = F.sqrt(dx * dx + dy * dy)
+    cx = (F.col("__xmin") + F.col("__xmax")) / 2
+    cy = (F.col("__ymin") + F.col("__ymax")) / 2
+    half_diag = (
+        F.sqrt(
+            (F.col("__xmax") - F.col("__xmin")) ** 2
+            + (F.col("__ymax") - F.col("__ymin")) ** 2
+        )
+        / 2
+    )
+    ub = F.sqrt((cx - qx) ** 2 + (cy - qy) ** 2) + half_diag
+    return lb, ub
+
+
+def _knn_candidates(
+    df: DataFrame, qx: float, qy: float, threshold: float
+) -> DataFrame:
+    """Rows of ``df`` (system columns included) whose distance lower bound
+    is at most ``threshold``, system columns dropped. A finite threshold
+    also yields the box ``[qx-t, qy-t, qx+t, qy+t]`` as a necessary
+    envelope range predicate, which Catalyst pushes into the parquet scan
+    (the same pruning surface as a bbox query)."""
+    lb, _ = _knn_bounds(qx, qy)
+    t = float(threshold)
+    cond = lb <= F.lit(t)
+    if math.isfinite(t):
+        box = (qx - t, qy - t, qx + t, qy + t)
+        cond = envelope_prefilter("intersects", box) & cond
+    return df.filter(cond).drop(*SYSTEM_COLUMNS)
+
+
 def get_knn(
     catalog: GeoDBCatalog,
     collection: str,
@@ -237,25 +284,33 @@ def get_knn(
     """Exact k nearest neighbors to a point, engine path (the PostGIS
     ``ORDER BY geom <-> q LIMIT k`` idiom).
 
-    Two-pass envelope-bounded search that stays JVM-side until the final
-    candidate set:
+    Filter-and-refine search that prunes JVM-side and scores only a
+    bounded candidate set:
 
-    1. per row, a distance LOWER bound (point-to-envelope box, 0 inside)
-       and UPPER bound (distance to envelope center + half diagonal; the
-       geometry is non-empty inside its tight envelope, so some geometry
-       point is within half a diagonal of the center) — plain Column
-       arithmetic on the persisted ``__xmin..__ymax`` columns;
+    1. per row, a distance LOWER and UPPER bound (``_knn_bounds``) — plain
+       Column arithmetic on the persisted ``__xmin..__ymax`` columns;
     2. threshold T = k-th smallest upper bound (one TakeOrdered job over
        the bound columns only — no geometry bytes move);
-    3. rows with ``lower_bound <= T`` (a parquet-stat- and file-prunable
-       range predicate on the envelope columns — the same pruning surface
-       as a bbox query with box ``[qx-T, qy-T, qx+T, qy+T]``) get the
-       exact kernel distance in an Arrow-vectorized UDF, then
-       ``ORDER BY dist LIMIT k`` (TakeOrderedAndProject, per-partition
-       heaps).
+    3. rows with ``lower_bound <= T`` (``_knn_candidates``, behind a
+       parquet-stat- and file-prunable range predicate on the envelope
+       columns — the same pruning surface as a bbox query with box
+       ``[qx-T, qy-T, qx+T, qy+T]``) are collected to the driver as Arrow
+       in one JVM-only job, capped at ``_KNN_DRIVER_ROWS + 1`` rows. When
+       the cap holds, each candidate gets the exact kernel distance
+       (``distance(parse_wkb(b), q)``, the same call the UDF makes, so
+       ``dist`` is bit-identical), the rows are ordered as
+       ``ORDER BY dist, id`` and the first k return as a local frame
+       (``LocalTableScan``: collecting it runs one JVM-only job over those
+       k rows and starts no Python worker). Above the cap, the candidates
+       are scored in an Arrow-vectorized UDF and ``ORDER BY dist LIMIT k``
+       runs distributed (TakeOrderedAndProject, per-partition heaps).
 
     At 100 TB, step 3 touches only the files near the query point; the
-    candidate count is O(k) for any non-pathological spatial distribution.
+    candidate count is O(k) for any non-pathological spatial
+    distribution, so the driver refine holds at most ``_KNN_DRIVER_ROWS``
+    rows. Pathological inputs (thousands of huge envelopes that all cover
+    the query point) overflow the cap and take the UDF fallback, which
+    keeps driver memory bounded.
     """
     from pyspark.sql import types as T
 
@@ -276,28 +331,40 @@ def get_knn(
             point = (point[1], point[0])
     qx, qy = float(point[0]), float(point[1])
 
-    df = catalog.load_df(collection, database, include_system=True)
-    zero = F.lit(0.0)
-    dx = F.greatest(F.col("__xmin") - qx, F.lit(qx) - F.col("__xmax"), zero)
-    dy = F.greatest(F.col("__ymin") - qy, F.lit(qy) - F.col("__ymax"), zero)
-    lb = F.sqrt(dx * dx + dy * dy)
-    cx = (F.col("__xmin") + F.col("__xmax")) / 2
-    cy = (F.col("__ymin") + F.col("__ymax")) / 2
-    half_diag = (
-        F.sqrt(
-            (F.col("__xmax") - F.col("__xmin")) ** 2
-            + (F.col("__ymax") - F.col("__ymin")) ** 2
-        )
-        / 2
+    # a NULL geometry has no envelope and no distance: never a neighbour
+    df = catalog.load_df(collection, database, include_system=True).filter(
+        F.col("__xmin").isNotNull()
     )
-    ub = F.sqrt((cx - qx) ** 2 + (cy - qy) ** 2) + half_diag
-
-    bounds = df.select(lb.alias("__lb"), ub.alias("__ub"))
-    kth = bounds.orderBy("__ub").limit(int(k)).agg(F.max("__ub")).collect()[0][0]
-    if kth is None:  # empty collection
+    _, ub = _knn_bounds(qx, qy)
+    # collected in ascending order, so the last is the k-th smallest: one
+    # TakeOrdered stage (an aggregate on top would add a shuffle stage)
+    smallest = df.select(ub.alias("__ub")).orderBy("__ub").limit(int(k)).collect()
+    if not smallest:  # no located rows (empty, or only NULL geometries)
         return df.drop(*SYSTEM_COLUMNS).withColumn(
             "dist", F.lit(None).cast("double")
         ).limit(0)
+
+    cand = _knn_candidates(df, qx, qy, smallest[-1][0])
+    tbl = cand.limit(_KNN_DRIVER_ROWS + 1).toArrow()
+    if tbl.num_rows <= _KNN_DRIVER_ROWS:
+        import pyarrow as pa
+
+        q = Geometry("Point", np.array([qx, qy], dtype=np.float64))
+        dist = [
+            distance(parse_wkb(b), q) for b in tbl.column("geometry").to_pylist()
+        ]
+        ids = tbl.column("id").to_pylist()
+        # Spark's ``orderBy("dist", "id")``: ascending, ties by id
+        order = sorted(range(len(dist)), key=lambda i: (dist[i], ids[i]))[: int(k)]
+        top = tbl.take(order).append_column(
+            "dist", pa.array([dist[i] for i in order], type=pa.float64())
+        )
+        schema = T.StructType(
+            [*cand.schema.fields, T.StructField("dist", T.DoubleType())]
+        )
+        # an Arrow table becomes a LocalTableScan; a Python list would be
+        # a pickled RDD whose scan starts Python workers
+        return df.sparkSession.createDataFrame(top, schema)
 
     @F.pandas_udf(T.DoubleType())
     def _dist(wkb: pd.Series) -> pd.Series:
@@ -306,14 +373,9 @@ def get_knn(
             lambda b: distance(parse_wkb(bytes(b)), q) if b is not None else None
         )
 
-    out = (
-        df.filter(lb <= F.lit(float(kth)))
-        .withColumn("dist", _dist(F.col("geometry")))
-        .drop(*SYSTEM_COLUMNS)
-        .orderBy("dist", "id")
-        .limit(int(k))
-    )
-    return out
+    return cand.withColumn("dist", _dist(F.col("geometry"))).orderBy(
+        "dist", "id"
+    ).limit(int(k))
 
 
 def get_geometry_types(
